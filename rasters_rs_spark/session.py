@@ -12,13 +12,16 @@ import os
 from pyspark.sql import SparkSession
 
 
-def get_spark(app: str = "rasters-rs-spark", cores: int | None = None,
-              shuffle_partitions: int | None = None) -> SparkSession:
+def configured_builder(app: str = "rasters-rs-spark", cores: int | None = None,
+                       shuffle_partitions: int | None = None
+                       ) -> SparkSession.Builder:
+    """The engine's session config on an unstarted builder, for callers
+    that add settings of their own before ``getOrCreate()``."""
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if shuffle_partitions is None:
         shuffle_partitions = max(cores, 8)
-    builder = (
+    return (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
@@ -32,8 +35,14 @@ def get_spark(app: str = "rasters-rs-spark", cores: int | None = None,
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        # workers skip re-reading unchanged zips per task (see pyworker)
+        .config("spark.python.daemon.module", "rasters_rs_spark.pyworker")
     )
-    return builder.getOrCreate()
+
+
+def get_spark(app: str = "rasters-rs-spark", cores: int | None = None,
+              shuffle_partitions: int | None = None) -> SparkSession:
+    return configured_builder(app, cores, shuffle_partitions).getOrCreate()
 
 
 def load_tables(spark: SparkSession, sf_dir: str, names=None) -> dict:

@@ -500,6 +500,26 @@ def run_image_curation_streaming(spark: SparkSession, source_dir: str,
             .trigger(availableNow=True).start())
 
 
+def _has_committed_epoch(fs, P, store: str) -> bool:
+    """True when ``store`` holds an epoch=<id> partition that a write
+    committed: its _SUCCESS marker or a non-empty data file. A crash
+    before the first commit leaves only empty or _temporary-only
+    partitions, which spark.read.parquet cannot infer a schema from."""
+    if not fs.exists(P(store)):
+        return False
+    for part in fs.listStatus(P(store)):
+        if not (part.isDirectory()
+                and part.getPath().getName().startswith("epoch=")):
+            continue
+        for st in fs.listStatus(part.getPath()):
+            name = st.getPath().getName()
+            if name == "_SUCCESS" or (
+                    st.isFile() and st.getLen() > 0
+                    and not name.startswith(("_", "."))):
+                return True
+    return False
+
+
 def image_curate_fold(spark: SparkSession, out_dir: str,
                       clip_threshold: float = 0.75,
                       max_hamming: int = 6, min_px: int = 16):
@@ -512,8 +532,10 @@ def image_curate_fold(spark: SparkSession, out_dir: str,
     appending duplicates, and the incremental phash probe already
     supersedes replayed ids on the register side
     (phash_neardup_incremental's replay filter), so the pair set is
-    unchanged on the second attempt. Existence probes use the Hadoop
-    FS API, not os.path. Readers of the two stores see an extra
+    unchanged on the second attempt. The register counts as prior
+    state only once it holds a committed epoch partition, so a crash
+    before the first commit replays cleanly. Existence probes use the
+    Hadoop FS API, not os.path. Readers of the two stores see an extra
     ``epoch`` partition column."""
     from pyspark.sql import functions as SF
 
@@ -536,7 +558,7 @@ def image_curate_fold(spark: SparkSession, out_dir: str,
         aligned = sized.join(
             gate.where(SF.col("keep")).select("image_id"),
             on="image_id").localCheckpoint(eager=True)
-        if fs.exists(P(register)):
+        if _has_committed_epoch(fs, P, register):
             prior = spark.read.parquet(register).drop("epoch")
             pairs = dedup.phash_neardup_incremental(
                 aligned, prior, max_hamming=max_hamming)

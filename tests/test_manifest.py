@@ -511,3 +511,31 @@ def test_image_curate_fold_replay_idempotent(spark, tmp_path):
     reg = [r["image_id"] for r in spark.read.parquet(
         f"{out}/register").select("image_id").collect()]
     assert len(reg) == len(set(reg))
+
+
+def test_image_curate_fold_replays_over_uncommitted_register(spark,
+                                                             tmp_path):
+    """ADVICE r8 (d): a crash after register/epoch=0 is created but
+    before any part file commits leaves an empty partition directory.
+    The replayed epoch must treat the register as empty (not fail to
+    infer its schema) and end with the clean run's keepers."""
+    from rasters_rs_spark.sources import synth
+    from rasters_rs_spark.streaming.pipeline import image_curate_fold
+
+    images = spark.createDataFrame(
+        synth.clip_caption_table(24, plant_neardups=((5, 4), (13, 12))))
+    b0 = images.where("image_id < 'img_00000012'")
+    b1 = images.where("image_id >= 'img_00000012'")
+
+    def keepers(out):
+        fold = image_curate_fold(spark, str(out), max_hamming=10)
+        fold(b0, 0)
+        fold(b1, 1)
+        return sorted(r["image_id"] for r in spark.read.parquet(
+            f"{out}/curated").select("image_id").collect())
+
+    crashed = tmp_path / "crashed"
+    (crashed / "register" / "epoch=0").mkdir(parents=True)
+    got = keepers(crashed)
+    assert got == keepers(tmp_path / "clean")
+    assert len(got) == len(set(got)) > 0

@@ -30,26 +30,17 @@ import numpy as np
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from pyspark.sql import SparkSession, functions as F  # noqa: E402
+from pyspark.sql import functions as F  # noqa: E402
+
+from rasters_rs_spark.session import configured_builder  # noqa: E402
 
 
 def get_spark_with_ui(cores: int):
+    """The engine's session, plus the UI that stage_skew reads."""
     return (
-        SparkSession.builder.master(f"local[{cores}]")
-        .appName("scale-proof")
-        .config("spark.sql.shuffle.partitions", str(cores))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
-        .config("spark.sql.files.maxPartitionBytes", "128m")
-        .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        configured_builder("scale-proof", cores, shuffle_partitions=cores)
         .config("spark.ui.enabled", "true")
         .config("spark.ui.port", "0")
-        .config("spark.sql.session.timeZone", "UTC")
         .getOrCreate()
     )
 
